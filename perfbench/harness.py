@@ -1,6 +1,6 @@
-"""Shared machinery of the three workloads: process environment, Spark
-start and stop, the set-up rounds, memory sampling, host labels,
-correctness comparison and the per-layer summary of a traced run."""
+"""Shared machinery of the workloads: process environment, Spark start
+and stop, memory and CPU sampling, host labels, correctness comparison
+and the per-layer summary of a traced run."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ import time
 from decimal import Decimal
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SETUP_ROUNDS = 4  # the first also launches the JVM; setup_s is the median of the rest
 CPUS = 4
 DRIVER_MEM = "2g"
 
@@ -35,9 +34,11 @@ def prepare_env(work: str, trace: bool) -> None:
         "spark.sql.warehouse.dir": os.path.join(work, "spark-warehouse"),
     }
     if trace:
-        # keep every job and stage of the run for the per-operation counters
+        # keep every job, stage and SQL execution of the run for the
+        # per-operation counters
         confs["spark.ui.retainedJobs"] = "1000000"
         confs["spark.ui.retainedStages"] = "1000000"
+        confs["spark.sql.ui.retainedExecutions"] = "1000000"
     args = " ".join(f"--conf {k}={v}" for k, v in confs.items())
     os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} pyspark-shell"
     if ROOT not in sys.path:
@@ -296,9 +297,9 @@ def layer_metrics(tracer, counters: dict[int, dict], measured_ops: set[int],
     """Per-layer numbers from the spans of one traced run.
 
     Times are the median self time per call of the layer's wrapped
-    function over the whole run (set-up rounds included, so a layer the
-    measured phase never calls still shows its set-up cost); Spark counts
-    are per operation of the measured phase."""
+    function over the whole run (set-up included, so a layer the measured
+    phase never calls still shows its set-up cost); Spark counts are per
+    operation of the measured phase."""
     selft = tracer.self_times()
     by_layer: dict[str, list[float]] = {}
     for s in tracer.spans:
@@ -313,7 +314,8 @@ def layer_metrics(tracer, counters: dict[int, dict], measured_ops: set[int],
     rows_scanned = sum(s.counters.get("rows_scanned", 0) for s in execs)
     n_ops = max(1, len(measured_ops))
     tot = {k: sum(counters.get(op, {}).get(k, 0) for op in measured_ops)
-           for k in ("jobs", "stages", "tasks", "shuffle_bytes", "spill_bytes", "executor_cpu_ns")}
+           for k in ("jobs", "stages", "tasks", "shuffle_bytes", "spill_bytes", "executor_cpu_ns",
+                     "python_ms")}
     files = sum(s.counters.get("files_read", 0) for s in execs)
     ing = [c for c in batch_calls if c["kind"] == "ingest"]
 
@@ -337,6 +339,7 @@ def layer_metrics(tracer, counters: dict[int, dict], measured_ops: set[int],
         "spark.spill_bytes_per_op": metric(tot["spill_bytes"] / n_ops, "bytes"),
         "spark.executor_cpu_ms_per_op": metric(tot["executor_cpu_ns"] / 1e6 / n_ops, "ms"),
         "spark.gc_ms_per_op": metric(gc_ms / n_ops, "ms"),
+        "spark.python_udf_ms_per_op": metric(tot["python_ms"] / n_ops, "ms"),
         "batch.ingest_s": metric(median([c["s"] for c in ing]), "s"),
         "batch.ingest_rows_per_s": metric(median([c["rows"] / c["s"] for c in ing]), "1/s"),
         "batch.time_to_query_s": metric(median([c["ttq_s"] for c in ing]), "s"),
@@ -345,9 +348,35 @@ def layer_metrics(tracer, counters: dict[int, dict], measured_ops: set[int],
         "batch.bytes_written": metric(statistics.fmean([c["bytes"] for c in ing]) if ing else 0, "bytes"),
         "batch.register_ms": metric(median(ms.get("batch.register", [0.0])), "ms"),
         "batch.files_per_segment": metric(files_per_segment, "count"),
+        "host.steal_pct": metric(host["steal_pct"] if host["steal_pct"] is not None else -1.0, "%"),
         "host.load1": metric(host["load1"] if host["load1"] is not None else -1.0, "load"),
         "host.calib_cpu_s": metric(host["calib_cpu_s"], "s"),
     }
+    return out
+
+
+def kind_metrics(tracer, measured_ops: set[int]) -> dict:
+    """Per template and per declared query, from the operation spans of
+    the measured phase: `broker.<template>.p50_ms`, and the median build
+    and execution time of each declared query,
+    `curation.<query>.build_s` / `.exec_s`. A workload reports zero for
+    the kinds it does not run, so both emit the same metric names."""
+    from broker import TEMPLATES
+    from curation import QUERIES
+
+    ops = {s.id: s for s in tracer.spans if s.id in measured_ops}
+    lat: dict[str, list[float]] = {}
+    for s in ops.values():
+        lat.setdefault(s.name, []).append(s.dur)
+    part: dict[tuple[str, str], list[float]] = {}
+    for s in tracer.spans:
+        if s.op in ops and s.layer in ("operators.build", "spark.exec") and s.parent == s.op:
+            part.setdefault((ops[s.op].name, s.layer), []).append(s.dur)
+    out = {f"broker.{k}.p50_ms": metric(1000.0 * percentile(lat[k], 50) if k in lat else 0.0, "ms")
+           for k in TEMPLATES}
+    for q in QUERIES:
+        out[f"curation.{q}.build_s"] = metric(median(part.get((q, "operators.build"), [])), "s")
+        out[f"curation.{q}.exec_s"] = metric(median(part.get((q, "spark.exec"), [])), "s")
     return out
 
 

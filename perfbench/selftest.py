@@ -123,7 +123,7 @@ def pin() -> int:
         for scale in ("tiny", "bench"):
             w = curation.LLMCuration(0, SCALES[scale], os.path.join(work, scale))
             w.generate()
-            w.setup_round(rt)
+            w.setup(rt)
             con = duckdb.connect()
             con.sql("CREATE VIEW documents AS SELECT * FROM read_parquet("
                     f"'{os.path.join(w.main_table(), '*.parquet')}')")

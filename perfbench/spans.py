@@ -10,15 +10,17 @@ Spark-side counters are read through public interfaces: each operation
 runs under its own job group, and after the run the jobs of each group
 are looked up with `statusTracker` and their stages in the application
 status store (the data the monitoring REST API serves, reachable here
-without the web UI). Planning phases come from
-`QueryExecution.tracker().phases()`, scan counts from the SQLMetrics of
-the executed plan.
+without the web UI). Python UDF time is the "time to run Python workers"
+SQLMetric of the SQL executions those jobs belong to, from the SQL status
+store. Planning phases come from `QueryExecution.tracker().phases()`,
+scan counts from the SQLMetrics of the executed plan.
 """
 
 from __future__ import annotations
 
 import functools
 import itertools
+import re
 import threading
 import time
 from contextlib import contextmanager
@@ -205,19 +207,22 @@ def install(patches: Patches, tracer: Tracer) -> Patches:
 # --------------------------------------------------------------------------
 
 
-def stage_counters(sc, groups: dict[int, str]) -> dict[int, dict]:
-    """Jobs, stages, tasks, shuffle, spill and executor CPU for each
-    operation's job group."""
+def stage_counters(spark, groups: dict[int, str]) -> dict[int, dict]:
+    """Jobs, stages, tasks, shuffle, spill, executor CPU and Python UDF
+    time for each operation's job group."""
+    sc = spark.sparkContext
     jvm = sc._jvm
     store = sc._jsc.sc().statusStore()
     no_tasks = jvm.java.util.ArrayList()
     no_q = sc._gateway.new_array(jvm.double, 0)
     tracker = sc.statusTracker()
     out = {}
+    job_op = {}
     for op, group in groups.items():
         c = {"jobs": 0, "stages": 0, "tasks": 0, "shuffle_bytes": 0,
-             "spill_bytes": 0, "executor_cpu_ns": 0}
+             "spill_bytes": 0, "executor_cpu_ns": 0, "python_ms": 0.0}
         for jid in tracker.getJobIdsForGroup(group):
+            job_op[int(jid)] = op
             info = tracker.getJobInfo(jid)
             if info is None:
                 continue
@@ -238,6 +243,46 @@ def stage_counters(sc, groups: dict[int, str]) -> dict[int, dict]:
                 c["spill_bytes"] += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
                 c["executor_cpu_ns"] += sd.executorCpuTime()
         out[op] = c
+    for op, ms in python_udf_ms(spark, job_op).items():
+        out[op]["python_ms"] += ms
+    return out
+
+
+PYTHON_TIME = "time to run Python workers"
+_DURATION = re.compile(r"([\d.]+) (ms|s|m|h)\b")
+_UNIT_MS = {"ms": 1.0, "s": 1e3, "m": 6e4, "h": 3.6e6}
+
+
+def python_udf_ms(spark, job_op: dict[int, int]) -> dict[int, float]:
+    """Per operation, the summed PYTHON_TIME metric of every plan node
+    that ran Python (UDFs, mapInPandas) in the SQL executions whose jobs
+    belong to the operation. The status store keeps each metric as the
+    text the SQL UI shows; its first duration is the total."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    out: dict[int, float] = {}
+    execs = store.executionsList().iterator()
+    while execs.hasNext():
+        ex = execs.next()
+        jobs = ex.jobs().keys().iterator()
+        op = None
+        while jobs.hasNext() and op is None:
+            op = job_op.get(int(jobs.next()))
+        if op is None:
+            continue
+        ids = []
+        ms = ex.metrics().iterator()
+        while ms.hasNext():
+            m = ms.next()
+            if m.name() == PYTHON_TIME:
+                ids.append(m.accumulatorId())
+        if not ids:
+            continue
+        values = store.executionMetrics(ex.executionId())
+        for acc in ids:
+            v = values.get(acc)
+            hit = _DURATION.search(str(v.get())) if v.isDefined() else None
+            if hit:
+                out[op] = out.get(op, 0.0) + float(hit.group(1)) * _UNIT_MS[hit.group(2)]
     return out
 
 
