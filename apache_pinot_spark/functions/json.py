@@ -587,7 +587,10 @@ def json_match_sql(
     if schema is not None:
         ddl = schema.simpleString() if isinstance(schema, T.DataType) else schema
         parsed = f"from_json({col_sql}, {_sq(ddl)})"
-    return "(" + _emit_node_sql(parse_json_filter(filter_expr), col_sql, parsed, config) + ")"
+    body = _emit_node_sql(parse_json_filter(filter_expr), col_sql, parsed, config)
+    # a bare "(false)" straight after a table name parses as a table alias
+    # with a column list ("FROM t WHERE (false)" → alias WHERE(false))
+    return body if body == "false" else f"({body})"
 
 
 def json_extract_scalar_sql(

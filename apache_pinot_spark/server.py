@@ -162,8 +162,9 @@ class PinotHttpServer:
                         # registration (PinotEngine.apply_sketch_columns)
                         if (tbl := self._name(parts[1])) is None:
                             return None
-                        tdf = getattr(server.engine, "_dfs", {}).get(tbl)
-                        if tdf is None:
+                        try:
+                            columns = server.engine.table(tbl).columns
+                        except KeyError:
                             return self._reply(
                                 404, {"error": f"unknown table {tbl!r}"}
                             )
@@ -175,16 +176,13 @@ class PinotHttpServer:
                             return self._reply(
                                 400, {"error": "body must map column -> sketch kind"}
                             )
-                        missing = [c for c in mapping if c not in tdf.columns]
+                        missing = [c for c in mapping if c not in columns]
                         if missing:
                             return self._reply(
                                 400,
                                 {"error": f"columns not in {tbl!r}: {missing}"},
                             )
-                        # (registration is engine-wide by column name,
-                        # like the dialect's other column declarations —
-                        # the table scoping here validates the request)
-                        server.engine.apply_sketch_columns(mapping)
+                        server.engine.apply_sketch_columns(tbl, mapping)
                         return self._reply(
                             200, {"status": f"{len(mapping)} sketch columns wired"}
                         )
@@ -199,6 +197,7 @@ class PinotHttpServer:
                         if (name := self._name(parts[1])) is None:
                             return None
                         server.catalog.drop_table(name)
+                        server.engine.drop(name)
                         return self._reply(200, {"status": f"{name} dropped"})
                     return self._reply(404, {"error": f"no route {self.path}"})
                 except FileNotFoundError:

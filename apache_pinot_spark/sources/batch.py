@@ -99,11 +99,10 @@ class TableConfig:
     # BYTES sketch-state columns (configuration-reference/schema.md:48
     # names serialized sketch metric columns) → wire kind, one of:
     # theta | tuple | bitmap | tdigest | kll | hllplus | hll_clearspring
-    # | freq_longs | freq_strings | datasketches_hll. Declaring them
-    # here makes the
-    # migration wiring CONFIG-DRIVEN: PinotEngine.register_ingested
-    # (and apply_sketch_columns) routes each to the matching
-    # register_*_column call, so the right merge domain serves
+    # | freq_longs | freq_strings | datasketches_hll | cpc (MIGRATION.md).
+    # Declaring them here makes the migration wiring CONFIG-DRIVEN:
+    # PinotEngine.register_ingested records them in the table's
+    # TableMeta.sketches, so the right merge domain serves
     # DISTINCTCOUNT*/PERCENTILE*/FREQUENT* automatically.
     sketch_columns: dict[str, str] = dc_field(default_factory=dict)
 
@@ -243,16 +242,16 @@ def apply_ingestion_transforms(df: DataFrame, config: "TableConfig") -> DataFram
 
     Everything stays a narrow map / codegen'd filter — no UDFs, no
     shuffles, pushdown-eligible when the source format supports it."""
-    from apache_pinot_spark.sqlfront import PinotDialect
+    from apache_pinot_spark.sqlfront import PinotDialect, TableMeta
 
     if not config.ingestion_transforms and not config.filter_function:
         return df
-    dialect = PinotDialect(table_columns=set(df.columns))
+    dialect = PinotDialect(TableMeta(columns=set(df.columns)))
     for tc in config.ingestion_transforms:
         col, fn = tc["columnName"], tc["transformFunction"]
         compiled = rewrite_expression_fragment(dialect, fn)
         df = df.withColumn(col, F.expr(compiled))
-        dialect.table_columns.add(col)
+        dialect.meta.columns.add(col)
     if config.filter_function:
         compiled = rewrite_expression_fragment(dialect, config.filter_function)
         df = df.where(f"NOT COALESCE(({compiled}), FALSE)")

@@ -163,6 +163,15 @@ def _split_literals(sql: str) -> list[tuple[bool, str]]:
     return out
 
 
+def _mask_literals(sql: str) -> str:
+    """Same-length copy of ``sql`` with string-literal contents blanked, so
+    offsets line up but quoted text cannot steer a keyword or paren scan."""
+    return "".join(
+        "'" + " " * (len(seg) - 2) + "'" if lit and len(seg) >= 2 else seg
+        for lit, seg in _split_literals(sql)
+    )
+
+
 def _sub_outside_literals(sql: str, fn: Callable[[str], str]) -> str:
     """Apply a text-rewrite function to the non-literal segments only —
     alias/column substitutions must never rewrite occurrences inside
@@ -370,6 +379,14 @@ _AGG_RE = re.compile(
 # A trailing "(" means a function call using the FROM keyword (e.g. ANSI
 # TRIM(LEADING '0' FROM substr(...))), not a table reference.
 _FROM_RE = re.compile(r"\bFROM\s+([A-Za-z_][\w.]*)(?![\w.]|\s*\()", re.IGNORECASE)
+_TABLE_REF_RE = re.compile(
+    r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)(?![\w.]|\s*\()", re.IGNORECASE
+)
+# the next entry of a comma-separated FROM list: [alias] , table
+_NEXT_TABLE_RE = re.compile(
+    r"(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?\s*,\s*([A-Za-z_][\w.]*)(?![\w.]|\s*\()",
+    re.IGNORECASE,
+)
 _OPTION_RE = re.compile(r"\bOPTION\s*\(([^)]*)\)\s*;?\s*$", re.IGNORECASE)
 # the statement-prefix form of query options: SET key=value; SELECT …
 _SET_STMT_RE = re.compile(
@@ -382,6 +399,21 @@ _ORDERBY_RE = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
 _GROUPBY_RE = re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE)
 
 
+def _table_refs(sql: str) -> list[str]:
+    """Names after FROM / JOIN (and later entries of a comma-separated
+    FROM list) anywhere in the statement, subqueries included; quoted
+    text is masked first."""
+    masked = _mask_literals(sql)
+    names = []
+    for m in _TABLE_REF_RE.finditer(masked):
+        names.append(m.group(1))
+        pos = m.end()
+        while nm := _NEXT_TABLE_RE.match(masked, pos):
+            names.append(nm.group(1))
+            pos = nm.end()
+    return names
+
+
 @dataclass
 class RewriteResult:
     sql: str
@@ -391,116 +423,127 @@ class RewriteResult:
     notes: list[str] = field(default_factory=list)
 
 
+# Sketch kinds a BYTES column can declare (MIGRATION.md's kind table) →
+# the functions module and registration call for the UDFs that kind needs
+# beyond _register_session_udfs; None when the session set already covers
+# it (or, for datasketches_hll, when the merge is native Spark).
+_SKETCH_KINDS: dict[str, tuple[str, str] | None] = {
+    "bitmap": ("bitmap_wire", "register_bitmap_udfs"),
+    "cpc": ("cpc_wire", "register_cpc_udfs"),
+    "datasketches_hll": None,
+    "freq_longs": ("freq_wire", "register_freq_wire_udfs"),
+    "freq_strings": ("freq_wire", "register_freq_wire_udfs"),
+    "hll_clearspring": ("hll_clearspring", "register_clearspring_udfs"),
+    "hllplus": None,
+    "kll": None,
+    "tdigest": None,
+    "theta": None,
+    "tuple": ("tuple_wire", "register_tuple_udfs"),
+}
+
+# TableMeta fields that hold per-column facts (sets: membership; dicts:
+# column-keyed values) — what two tables must agree on for a column
+_COLUMN_FACTS = (
+    "array", "binary", "sketches", "sketch_ranges", "json_schemas",
+    "json_configs", "timestamp_index", "text_index", "segment_partitions",
+)
+
+
+@dataclass
+class TableMeta:
+    """One registered table's catalog state: its frame and what the
+    dialect knows about its columns (the reference keeps schema and index
+    config per table, basics/Concepts.md:25).
+
+    Derived from the schema: ``df``, the cached row ``count`` (totalDocs),
+    ``columns`` (a SELECT alias naming a real column is not substituted in
+    WHERE), ``array`` (scalar predicates get ANY-element semantics,
+    schema.md:25) and ``binary`` (BYTES: DISTINCTCOUNTHLL merges
+    serialized register sketches). Declared: ``sketches`` (BYTES column →
+    sketch kind, a key of _SKETCH_KINDS), ``sketch_ranges`` (histogram
+    sketch column → [lo, hi)), ``json_schemas`` / ``json_configs`` (JSON
+    column → inferred schema / JsonIndexConfig, json-index.md:53-81),
+    ``timestamp_index`` (time column → units with a materialized
+    ``$col$UNIT`` column), ``text_index`` (columns with a ``$col$tokens``
+    shadow column) and ``segment_partitions`` (column → partition count)."""
+
+    df: DataFrame | None = None
+    count: int | None = None
+    columns: set[str] = field(default_factory=set)
+    array: set[str] = field(default_factory=set)
+    binary: set[str] = field(default_factory=set)
+    sketches: dict[str, str] = field(default_factory=dict)
+    sketch_ranges: dict[str, tuple[float, float]] = field(default_factory=dict)
+    json_schemas: dict[str, T.DataType] = field(default_factory=dict)
+    json_configs: dict = field(default_factory=dict)
+    timestamp_index: dict[str, set[str]] = field(default_factory=dict)
+    text_index: set[str] = field(default_factory=set)
+    segment_partitions: dict[str, int] = field(default_factory=dict)
+
+    @classmethod
+    def of(cls, df: DataFrame, **declared) -> "TableMeta":
+        fields = df.schema.fields
+        return cls(
+            df=df,
+            columns={f.name for f in fields},
+            array={f.name for f in fields if isinstance(f.dataType, T.ArrayType)},
+            binary={f.name for f in fields if isinstance(f.dataType, T.BinaryType)},
+            **declared,
+        )
+
+    def facts(self, col: str) -> tuple:
+        """Everything this table says about ``col``, comparable across tables."""
+        return tuple(
+            col in v if isinstance(v, set) else v.get(col)
+            for v in (getattr(self, f) for f in _COLUMN_FACTS)
+        )
+
+    @staticmethod
+    def merge(tables: dict[str, "TableMeta"]) -> tuple["TableMeta", list[str]]:
+        """The facts of every table a statement names, as one TableMeta.
+        A column two tables declare differently loses all its facts (no
+        column-specific rewrite can be right for both); the returned notes
+        say which columns and tables."""
+        if len(tables) == 1:
+            return next(iter(tables.values())), []
+        first: dict[str, tuple[str, tuple]] = {}
+        clash: dict[str, list[str]] = {}
+        for name, t in tables.items():
+            for col in sorted(t.columns):
+                facts = t.facts(col)
+                owner, seen = first.setdefault(col, (name, facts))
+                if seen != facts:
+                    clash.setdefault(col, [owner]).append(name)
+        out = TableMeta(columns=set().union(*(t.columns for t in tables.values())))
+        for f in _COLUMN_FACTS:
+            acc = getattr(out, f)
+            for t in tables.values():
+                if isinstance(acc, set):
+                    acc |= getattr(t, f) - clash.keys()
+                else:
+                    acc.update((c, v) for c, v in getattr(t, f).items() if c not in clash)
+        notes = [
+            f"column {col!r} differs between tables {', '.join(names)}: "
+            "left unrewritten (no multi-value, sketch, index or partition rewrite)"
+            for col, names in clash.items()
+        ]
+        return out, notes
+
+
 class PinotDialect:
-    """Stateless-ish rewriter; array-column, JSON-schema, and
-    timestamp-index metadata come from the owning engine (or empty for
+    """Stateless-ish rewriter over one statement's resolved table facts
+    (PinotEngine.rewrite merges the tables the statement names; empty for
     standalone use)."""
 
-    def __init__(
-        self,
-        array_columns: set[str] | None = None,
-        json_schemas: dict[str, T.DataType] | None = None,
-        timestamp_index: dict[tuple[str, str], str] | None = None,
-        text_index: dict[str, str] | None = None,
-        table_columns: set[str] | None = None,
-        binary_columns: set[str] | None = None,
-        json_configs: dict | None = None,
-        segment_partitions: dict[str, int] | None = None,
-        sketch_ranges: dict[str, tuple[float, float]] | None = None,
-        tdigest_columns: set[str] | None = None,
-        theta_columns: set[str] | None = None,
-        clearspring_hll_columns: set[str] | None = None,
-        kll_columns: set[str] | None = None,
-        freq_wire_columns: dict[str, str] | None = None,
-        hllplus_columns: set[str] | None = None,
-        bitmap_columns: set[str] | None = None,
-        tuple_columns: set[str] | None = None,
-        ds_hll_columns: set[str] | None = None,
-        cpc_columns: set[str] | None = None,
-    ):
-        self.array_columns = array_columns or set()
-        # real column names of registered tables: a SELECT alias that
-        # shadows a real column must NOT be substituted in WHERE (the
-        # column reference wins, as in Pinot/standard SQL)
-        self.table_columns = table_columns or set()
-        # BYTES columns: DISTINCTCOUNTHLL over one merges serialized HLL
-        # register sketches instead of hashing raw values
-        # (configuration-reference/schema.md:48)
-        self.binary_columns = binary_columns or set()
-        # BYTES histogram-sketch column → its declared [lo, hi) value
-        # range (needed to interpret bin indices as values)
-        self.sketch_ranges = sketch_ranges or {}
-        # BYTES columns holding serialized t-digests (tdunning MergingDigest
-        # VERBOSE — the Pinot object-serde wire format, schema.md:48):
-        # PERCENTILETDIGEST over one merges-and-estimates via the
-        # registered pandas grouped-agg UDF (functions/tdigest.py)
-        self.tdigest_columns = tdigest_columns or set()
-        # BYTES columns holding serialized theta sketches (Apache
-        # DataSketches compact-theta wire format, functions/theta.py —
-        # a migrating Pinot user's sketch columns load directly):
-        # DISTINCTCOUNTTHETASKETCH over one
-        # merges-and-estimates via the registered UDF pair
-        self.theta_columns = theta_columns or set()
-        # BYTES columns holding CLEARSPRING (stream-lib) serialized HLLs —
-        # the reference's own DISTINCTCOUNTHLL sketch-column wire format
-        # (functions/hll_clearspring.py, byte-golden vs stream-2.9.8):
-        # DISTINCTCOUNTHLL over one register-max merges and estimates in
-        # the clearspring domain instead of the portable register path
-        self.clearspring_hll_columns = clearspring_hll_columns or set()
-        # BYTES columns holding serialized DataSketches KllDoublesSketch
-        # percentile state (functions/kll_wire.py, jar-validated both ways):
-        # PERCENTILEKLL over one merges in weighted-sample space and
-        # estimates with the library's sorted-view rule
-        self.kll_columns = kll_columns or set()
-        # BYTES columns holding serialized DataSketches frequencies
-        # sketches (functions/freq_wire.py), column → 'longs' | 'strings':
-        # FREQUENT*SKETCH over one merges in the wire domain and returns
-        # the merged wire blob (hex) instead of the engine-local format
-        self.freq_wire_columns = freq_wire_columns or {}
-        # BYTES columns holding stream-lib HyperLogLogPlus blobs (the
-        # reference's DISTINCTCOUNTHLLPLUS sketch columns;
-        # functions/hllplus_wire.py — byte-golden vs stream-2.9.8):
-        # DISTINCTCOUNTHLLPLUS over one merges + estimates in the wire
-        # domain instead of Spark's native HLL++
-        self.hllplus_columns = hllplus_columns or set()
-        # BYTES columns holding SERIALIZED RoaringBitmaps (the public
-        # DistinctCountBitmapAggregationFunction convention for BYTES
-        # input; functions/bitmap_wire.py — byte-golden vs
-        # RoaringBitmap-1.3.0): DISTINCTCOUNTBITMAP over one ORs the
-        # blobs and counts instead of hashing raw values
-        self.bitmap_columns = bitmap_columns or set()
-        # BYTES columns holding serialized DataSketches tuple sketches
-        # with integer summaries (functions/tuple_wire.py, validated
-        # against datasketches-java): the DISTINCTCOUNTTUPLESKETCH /
-        # SUMVALUES / AVGVALUE family merges in the wire domain
-        self.tuple_columns = tuple_columns or set()
-        # BYTES columns holding Apache DataSketches HLL blobs (family 7,
-        # what Spark's hll_sketch_agg writes): DISTINCTCOUNTHLL over one
-        # merges via the native hll_union_agg — zero-Python JVM path
-        self.ds_hll_columns = ds_hll_columns or set()
-        # BYTES columns holding serialized DataSketches CPC sketches
-        # (functions/cpc_wire.py — compressed format parsed from the
-        # published layout, estimates library-exact, merged blobs
-        # byte-identical to the jar's own CpcUnion results):
-        # DISTINCTCOUNTCPCSKETCH over one merges + estimates in the wire
-        # domain; the RAW form returns the merged loadable blob
-        self.cpc_columns = cpc_columns or set()
-        self.json_schemas = json_schemas or {}  # column name → inferred schema
-        # column → JsonIndexConfig (flattening rules, json-index.md:53-81)
-        self.json_configs = json_configs or {}
-        # segment-partition routing (Pinot segmentPartitionConfig): column
-        # → partition count; equality predicates on the column get the
-        # matching bucket predicate so the parquet scan partition-prunes
-        self.segment_partitions = segment_partitions or {}
-        # (time column, UNIT) → materialized `$col$UNIT` column
-        # (timestamp-index.md:25-28: the index rewrite targets dateTrunc)
-        self.timestamp_index = timestamp_index or {}
-        # text column → materialized tokenized shadow column (`$col$tokens`,
-        # the engine's Lucene-index analogue: queries skip re-tokenizing)
-        self.text_index = text_index or {}
+    def __init__(self, meta: TableMeta | None = None):
+        self.meta = meta or TableMeta()
         # per-rewrite accumulator of raw DISTINCTCOUNTHLL arguments (reset
         # by rewrite(); resolved by _expand_hll)
         self._hll_args: list[str] = []
+
+    def _kind(self, col: str) -> str | None:
+        """The declared sketch kind of a BYTES column, or None."""
+        return self.meta.sketches.get(col.strip())
 
     # -- function handlers ------------------------------------------------
     def _handlers(self) -> dict[str, Callable[[list[str]], str]]:
@@ -521,9 +564,9 @@ class PinotDialect:
             # timestamp-index rewrite (timestamp-index.md:41: 45s → 4.2s):
             # substitute the materialized pre-truncated column when the
             # table layout declares one for this (column, granularity)
-            mat = self.timestamp_index.get((a[1].strip(), unit))
-            if mat:
-                return f"`{mat}`"
+            col = a[1].strip()
+            if unit in self.meta.timestamp_index.get(col, ()):
+                return f"`${col}${unit}`"
             return f"CAST(unix_millis(CAST(date_trunc('{unit}', {a[1]}) AS TIMESTAMP)) AS BIGINT)"
 
         def from_datetime(a):
@@ -546,14 +589,14 @@ class PinotDialect:
             from apache_pinot_spark.functions.hll import hll_merge_estimate_sql
 
             arg = a[0].strip()
-            if arg in self.clearspring_hll_columns:
+            if self._kind(arg) == "hll_clearspring":
                 from apache_pinot_spark.functions.hll_clearspring import (
                     ESTIMATE_UDF,
                     MERGE_UDF,
                 )
 
                 return f"{ESTIMATE_UDF}({MERGE_UDF}({arg}))"
-            if arg in self.ds_hll_columns:
+            if self._kind(arg) == "datasketches_hll":
                 # Apache DataSketches HLL wire blobs (family 7 — what
                 # Spark's own hll_sketch_agg and the wider Spark/
                 # Databricks ecosystem serialize): merged and estimated
@@ -566,7 +609,7 @@ class PinotDialect:
                     f"CAST(ROUND(hll_sketch_estimate("
                     f"hll_union_agg({arg}, true))) AS BIGINT)"
                 )
-            if arg in self.binary_columns:
+            if arg in self.meta.binary:
                 return hll_merge_estimate_sql(a[0], "spark")
             try:
                 k = self._hll_args.index(arg)
@@ -581,17 +624,18 @@ class PinotDialect:
             # Raw columns: Spark-native HLL++ (fast JVM path, NOT
             # oracle-reproducible).
             arg = a[0].strip()
-            if arg in self.hllplus_columns:
+            if self._kind(arg) == "hllplus":
                 from apache_pinot_spark.functions.hllplus_wire import (
                     ESTIMATE_UDF,
                     MERGE_UDF,
                 )
 
                 return f"{ESTIMATE_UDF}({MERGE_UDF}({arg}))"
-            if arg in self.binary_columns:
+            if arg in self.meta.binary:
                 raise ValueError(
                     f"DISTINCTCOUNTHLLPLUS({arg}): BYTES column not declared "
-                    "as HLL++ state — call register_hllplus_column first "
+                    "as HLL++ state — declare it first with "
+                    "apply_sketch_columns(table, {column: 'hllplus'}) "
                     "(counting distinct serialized blobs is never the intent)"
                 )
             return f"approx_count_distinct({a[0]})"
@@ -607,14 +651,14 @@ class PinotDialect:
             )
 
             arg = a[0].strip()
-            if arg in self.hllplus_columns:
+            if self._kind(arg) == "hllplus":
                 return f"hex({MERGE_UDF}({arg}))"
-            if arg in self.binary_columns:
+            if arg in self.meta.binary:
                 raise ValueError(
                     f"DISTINCTCOUNTRAWHLLPLUS({arg}): BYTES column not "
-                    "declared as HLL++ state — call register_hllplus_column "
-                    "first (building a sketch OF serialized blobs is never "
-                    "the intent)"
+                    "declared as HLL++ state — declare it first with "
+                    "apply_sketch_columns(table, {column: 'hllplus'}) "
+                    "(building a sketch OF serialized blobs is never the intent)"
                 )
             # the CAST renders values with the JVM's own toString — exact
             # Long/Double rendering parity on any JVM, and nullable int
@@ -684,14 +728,14 @@ class PinotDialect:
             legs = []
             for p in preds:
                 guarded = f"CASE WHEN ({p}) THEN {col} END"
-                if col in self.theta_columns:
+                if self._kind(col) == "theta":
                     legs.append(f"{UNION_UDF}({guarded})")
                 else:
                     legs.append(f"{BUILD_UDF}({guarded}, {kk})")
             return legs
 
         def distinctcountthetasketch(a):
-            # Over a BYTES theta-sketch column (register_theta_column):
+            # Over a BYTES theta-sketch column (sketch kind 'theta'):
             # union the group's sketches, estimate, round to a count —
             # the public function's return shape. Over a raw column the
             # engine answers EXACTLY (COUNT DISTINCT): the sketch is an
@@ -719,7 +763,7 @@ class PinotDialect:
                     f"array({', '.join(legs)}))) AS BIGINT)"
                 )
             arg = a[0].strip()
-            if arg in self.theta_columns:
+            if self._kind(arg) == "theta":
                 return f"CAST(ROUND({ESTIMATE_UDF}({UNION_UDF}({arg}))) AS BIGINT)"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -739,32 +783,32 @@ class PinotDialect:
                     f"hex({SETEXPR_RAW_UDF}('{e}', array({', '.join(legs)})))"
                 )
             arg = a[0].strip()
-            if arg not in self.theta_columns:
+            if self._kind(arg) != "theta":
                 raise ValueError(
                     f"DISTINCTCOUNTRAWTHETASKETCH({arg}): column is not a "
                     "registered theta-sketch BYTES column "
-                    "(PinotEngine.register_theta_column)"
+                    "(sketch kind 'theta')"
                 )
             return f"hex({UNION_UDF}({arg}))"
 
         def _require_tuple(arg: str, fn: str) -> str:
             arg = arg.strip()
-            if arg not in self.tuple_columns:
+            if self._kind(arg) != "tuple":
                 raise ValueError(
                     f"{fn}({arg}): column is not a registered tuple-sketch "
-                    "BYTES column (PinotEngine.register_tuple_column)"
+                    "BYTES column (sketch kind 'tuple')"
                 )
             return arg
 
         def distinctcounttuplesketch(a):
             # Over a BYTES integer-sum tuple-sketch column
-            # (register_tuple_column): merge the group's sketches in the
+            # (sketch kind 'tuple'): merge the group's sketches in the
             # DataSketches wire domain and report the distinct estimate.
             # Over a raw column: exact, same stance as the theta form.
             from apache_pinot_spark.functions.tuple_wire import ESTIMATE_UDF as TE
 
             arg = a[0].strip()
-            if arg in self.tuple_columns:
+            if self._kind(arg) == "tuple":
                 return f"CAST(ROUND({TE}({arg})) AS BIGINT)"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -792,7 +836,7 @@ class PinotDialect:
 
         def distinctcountbitmap(a):
             # Over a BYTES column registered as serialized RoaringBitmaps
-            # (register_bitmap_column): OR the blobs, count the union —
+            # (sketch kind 'bitmap'): OR the blobs, count the union —
             # the public DistinctCountBitmapAggregationFunction BYTES
             # behavior (functions/bitmap_wire.py, byte-golden vs the
             # RoaringBitmap jar). Over a raw column the bitmap is only
@@ -801,7 +845,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.bitmap_wire import CARD_UDF
 
             arg = a[0].strip()
-            if arg in self.bitmap_columns:
+            if self._kind(arg) == "bitmap":
                 return f"{CARD_UDF}({arg})"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -814,17 +858,17 @@ class PinotDialect:
             from apache_pinot_spark.functions.bitmap_wire import UNION_UDF as BM_UNION
 
             arg = a[0].strip()
-            if arg not in self.bitmap_columns:
+            if self._kind(arg) != "bitmap":
                 raise ValueError(
                     f"DISTINCTCOUNTRAWBITMAP({arg}): column is not a "
                     "registered RoaringBitmap BYTES column "
-                    "(PinotEngine.register_bitmap_column)"
+                    "(sketch kind 'bitmap')"
                 )
             return f"hex({BM_UNION}({arg}))"
 
         def distinctcountcpcsketch(a):
             # Over a BYTES column registered as serialized DataSketches
-            # CPC sketches (register_cpc_column): merge the blobs in the
+            # CPC sketches (sketch kind 'cpc'): merge the blobs in the
             # coupon-matrix domain and estimate library-exactly (HIP for
             # a single un-merged blob, ICON otherwise —
             # functions/cpc_wire.py, golden vs datasketches-java). Over a
@@ -833,7 +877,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.cpc_wire import EST_UDF
 
             arg = a[0].strip()
-            if arg in self.cpc_columns:
+            if self._kind(arg) == "cpc":
                 return f"{EST_UDF}({arg})"
             return f"COUNT(DISTINCT {a[0]})"
 
@@ -844,11 +888,11 @@ class PinotDialect:
             from apache_pinot_spark.functions.cpc_wire import UNION_UDF as CPC_UNION
 
             arg = a[0].strip()
-            if arg not in self.cpc_columns:
+            if self._kind(arg) != "cpc":
                 raise ValueError(
                     f"DISTINCTCOUNTRAWCPCSKETCH({arg}): column is not a "
                     "registered CPC BYTES column "
-                    "(PinotEngine.register_cpc_column)"
+                    "(sketch kind 'cpc')"
                 )
             return f"hex({CPC_UNION}({arg}))"
 
@@ -1094,19 +1138,19 @@ class PinotDialect:
             # Requires the column's declared [lo, hi) range, registered
             # via PinotEngine.register_sketch_range.
             arg = a[0].strip()
-            if arg in self.tdigest_columns:
+            if self._kind(arg) == "tdigest":
                 # serialized-t-digest BYTES metric: merge the group's
                 # blobs and estimate in rank space (functions/tdigest.py;
-                # UDF registered by PinotEngine.register_tdigest_column)
+                # UDF registered per session by _register_session_udfs)
                 from apache_pinot_spark.functions.tdigest import UDF_NAME
 
                 return f"{UDF_NAME}({arg}, {float(a[1])!r})"
-            if arg in self.binary_columns:
-                rng = self.sketch_ranges.get(arg)
+            if arg in self.meta.binary:
+                rng = self.meta.sketch_ranges.get(arg)
                 if rng is None:
                     raise ValueError(
                         f"PERCENTILE over BYTES column {arg!r} needs its histogram "
-                        "range: call register_sketch_range(column, lo, hi) first"
+                        "range: call register_sketch_range(table, column, lo, hi) first"
                     )
                 from apache_pinot_spark.functions.quantile import (
                     merged_counts_sql,
@@ -1120,14 +1164,14 @@ class PinotDialect:
 
         def percentile_kll(a):
             # PERCENTILEKLL(col, pct): over a registered KLL BYTES column
-            # (register_kll_column) the group's serialized
+            # (sketch kind 'kll') the group's serialized
             # KllDoublesSketch blobs merge in weighted-sample space and
             # estimate with the library's sorted-view rule
             # (functions/kll_wire.py — DataSketches wire interop).
             # Raw numeric columns take the deterministic
             # percentile_approx path like PERCENTILEEST.
             arg = a[0].strip()
-            if arg in self.kll_columns:
+            if self._kind(arg) == "kll":
                 from apache_pinot_spark.functions.kll_wire import PCT_UDF
 
                 return f"{PCT_UDF}({arg}, {float(a[1])!r})"
@@ -1149,7 +1193,7 @@ class PinotDialect:
             from apache_pinot_spark.functions.kll_wire import BUILD_UDF, RAW_UDF
 
             arg = a[0].strip()
-            if arg in self.kll_columns:
+            if self._kind(arg) == "kll":
                 return f"hex({RAW_UDF}({arg}))"
             k = int(float(a[2])) if len(a) > 2 else 200
             return f"hex({BUILD_UDF}(CAST({a[0]} AS DOUBLE), {k}))"
@@ -1217,16 +1261,16 @@ class PinotDialect:
             from apache_pinot_spark.functions.hll import hll_merge_sketch_sql
 
             arg = a[0].strip()
-            if arg in self.clearspring_hll_columns:
+            if self._kind(arg) == "hll_clearspring":
                 from apache_pinot_spark.functions.hll_clearspring import MERGE_UDF
 
                 return f"hex({MERGE_UDF}({arg}))"
-            if arg in self.ds_hll_columns:
+            if self._kind(arg) == "datasketches_hll":
                 # merged DataSketches HLL blob, still loadable by the
                 # library and by hll_sketch_estimate — all JVM-side
                 # (mixed-lgK inputs allowed, as in the estimate form)
                 return f"hex(hll_union_agg({arg}, true))"
-            if arg not in self.binary_columns:
+            if arg not in self.meta.binary:
                 raise ValueError(
                     f"DISTINCTCOUNTRAWHLL({arg}): column is not a BYTES HLL "
                     "sketch column (raw columns: use DISTINCTCOUNTHLL)"
@@ -1245,7 +1289,7 @@ class PinotDialect:
             )
 
             arg = a[0].strip()
-            if arg in self.tdigest_columns:
+            if self._kind(arg) == "tdigest":
                 return f"hex({RAW_UDF_NAME}({arg}))"
             return f"hex({BUILD_RAW_UDF_NAME}(CAST({a[0]} AS DOUBLE)))"
 
@@ -1828,8 +1872,8 @@ class PinotDialect:
             from apache_pinot_spark.functions.freqitems import SKETCH_UDF
 
             arg = a[0].strip()
-            kind = self.freq_wire_columns.get(arg)
-            if kind is not None:
+            kind = self._kind(arg)
+            if kind in ("freq_longs", "freq_strings"):
                 # migrated DataSketches wire column: merge + re-emit in
                 # the WIRE format (functions/freq_wire.py), so existing
                 # clients keep deserializing with the reference library
@@ -1838,7 +1882,7 @@ class PinotDialect:
                     MERGE_STRINGS_UDF,
                 )
 
-                udf = MERGE_LONGS_UDF if kind == "longs" else MERGE_STRINGS_UDF
+                udf = MERGE_LONGS_UDF if kind == "freq_longs" else MERGE_STRINGS_UDF
                 return f"hex({udf}({arg}))"
             return f"hex({SKETCH_UDF}({a[0]}))"
 
@@ -1880,9 +1924,9 @@ class PinotDialect:
             exclude = set(extra[1].split(",")) if len(extra) > 1 and extra[1] else None
             # materialized text index applies only with default stop words
             # (per-query overrides change the token stream)
-            tokens_col = None
-            if include is None and exclude is None:
-                tokens_col = self.text_index.get(a[0].strip())
+            col = a[0].strip()
+            indexed = include is None and exclude is None and col in self.meta.text_index
+            tokens_col = f"${col}$tokens" if indexed else None
             return text_match_sql(a[0], _unquote(a[1]), include, exclude, tokens_col)
 
         def text_contains(a):
@@ -1890,8 +1934,10 @@ class PinotDialect:
 
         def json_match(a):
             col = a[0].strip()
-            schema = self.json_schemas.get(col)
-            return json_match_sql(col, _unquote(a[1]), schema, self.json_configs.get(col))
+            schema = self.meta.json_schemas.get(col)
+            return json_match_sql(
+                col, _unquote(a[1]), schema, self.meta.json_configs.get(col)
+            )
 
         handlers = {
             "ADD": add,
@@ -2269,7 +2315,7 @@ class PinotDialect:
             return sql
         where = wm.group(1)
         for alias, expr in aliases.items():
-            if alias in self.table_columns:
+            if alias in self.meta.columns:
                 continue
             where = _sub_outside_literals(
                 where, lambda seg, a=alias, e=expr: re.sub(rf"\b{re.escape(a)}\b", f"({e})", seg)
@@ -2297,7 +2343,7 @@ class PinotDialect:
         Literal-safe: a match is only rewritten when the column NAME sits
         outside any string literal (the matched value may itself be a
         quoted literal — that's fine, only the anchor is guarded)."""
-        for col in self.array_columns:
+        for col in self.meta.array:
             sql = _guarded_sub(
                 rf"\b({re.escape(col)})\s*=\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)",
                 rf"array_contains(\1, \2)",
@@ -2330,7 +2376,7 @@ class PinotDialect:
         at plan time."""
         from apache_pinot_spark.sources.batch import segment_partition_col_name
 
-        for col, n in self.segment_partitions.items():
+        for col, n in self.meta.segment_partitions.items():
             bucket_col = f"`{segment_partition_col_name(col)}`"
             sql = _guarded_sub(
                 rf"\b({re.escape(col)})\s*=\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)",
@@ -2384,14 +2430,9 @@ class PinotDialect:
             hll_pair_sqls,
         )
 
-        # Literal-masked copy for all POSITION work: same length as sql, so
-        # offsets line up, but string-literal contents are blanked — a ')'
-        # or 'FROM' inside a quoted value must not steer the scan.
-        masked = "".join(
-            seg if not lit else "'" + " " * (len(seg) - 2) + "'"
-            if len(seg) >= 2 else seg
-            for lit, seg in _split_literals(sql)
-        )
+        # Literal-masked copy for all POSITION work: a ')' or 'FROM' inside
+        # a quoted value must not steer the scan.
+        masked = _mask_literals(sql)
 
         def _tail_ok(pos: int) -> bool:
             tail = masked[pos:].lstrip()
@@ -2545,8 +2586,8 @@ def _register_session_udfs(spark: SparkSession) -> None:
     session: FREQUENTSTRINGSSKETCH / PERCENTILERAWTDIGEST /
     DISTINCTCOUNTRAWHLLPLUS / ID_SET / PERCENTILERAWKLL / FUNNEL_MAX_STEP
     strict_increase / theta build+setexpr / NORMALIZE all work on raw
-    columns with no prior registration, so they must exist up front
-    (theta's BYTES-column path stays lazy behind column declaration)."""
+    columns with no prior registration, so they must exist up front. The
+    remaining sketch kinds register theirs on declaration (_SKETCH_KINDS)."""
     if spark in _UDF_SESSIONS:
         return
     from apache_pinot_spark.functions.freqitems import register_freq_udfs
@@ -2585,28 +2626,7 @@ class PinotEngine:
         self.spark = spark
         self.default_limit = default_limit  # Pinot broker default for selections
         self.num_groups_limit = num_groups_limit
-        self._dfs: dict[str, DataFrame] = {}
-        self._json_schemas: dict[str, T.DataType] = {}
-        self._array_columns: set[str] = set()
-        self._binary_columns: set[str] = set()
-        self._table_columns: set[str] = set()
-        self._table_counts: dict[str, int] = {}  # totalDocs cache
-        self._json_index_configs: dict = {}  # column → JsonIndexConfig
-        self._timestamp_index: dict[tuple[str, str], str] = {}
-        self._text_index: dict[str, str] = {}
-        self._segment_partitions: dict[str, int] = {}
-        self._sketch_ranges: dict[str, tuple[float, float]] = {}
-        self._tdigest_columns: set[str] = set()
-        self._theta_columns: set[str] = set()
-        self._clearspring_hll_columns: set[str] = set()
-        self._kll_columns: set[str] = set()
-        self._freq_wire_columns: dict[str, str] = {}
-        self._hllplus_columns: set[str] = set()
-        self._bitmap_columns: set[str] = set()
-        self._tuple_columns: set[str] = set()
-        self._ds_hll_columns: set[str] = set()
-        self._cpc_columns: set[str] = set()
-        self._upsert_tables: dict[str, object] = {}  # name → UpsertConfig
+        self._tables: dict[str, TableMeta] = {}  # lower-cased name → state
         self._rollups: list = []  # RollupSpec registry
         _register_session_udfs(spark)
         if sf_dir:
@@ -2615,31 +2635,35 @@ class PinotEngine:
 
     def register(self, name: str, df: DataFrame, json_columns: list[str] | None = None):
         df.createOrReplaceTempView(name)
-        self._note_table(name, df, json_columns)
+        self._note_table(
+            name, df, json_schemas={c: infer_json_schema(df, c) for c in json_columns or []}
+        )
 
-    def _note_table(self, name: str, df: DataFrame, json_columns: list[str] | None = None):
-        self._dfs[name] = df
-        self._table_counts.pop(name, None)
-        for f in df.schema.fields:
-            self._table_columns.add(f.name)
-            if isinstance(f.dataType, T.ArrayType):
-                self._array_columns.add(f.name)
-            if isinstance(f.dataType, T.BinaryType):
-                self._binary_columns.add(f.name)
-        for col in json_columns or []:
-            self._json_schemas[col] = infer_json_schema(df, col)
+    def _note_table(self, name: str, df: DataFrame, **declared) -> None:
+        """(Re)build the table's catalog state; re-registering replaces it."""
+        self._tables[name.lower()] = TableMeta.of(df, **declared)
 
-    def set_json_index_config(self, column: str, config) -> None:
+    def table(self, name: str) -> TableMeta:
+        """The registered table's catalog state (KeyError when unknown)."""
+        return self._tables[name.lower()]
+
+    def drop(self, name: str) -> None:
+        """Forget a table: its catalog state and its view."""
+        self._tables.pop(name.lower(), None)
+        self.spark.catalog.dropTempView(name)
+
+    def set_json_index_config(self, table: str, column: str, config) -> None:
         """Attach a JSON index flattening config
-        (functions.json.JsonIndexConfig) to a JSON column: JSON_MATCH
-        predicates on paths the config leaves unindexed match nothing,
-        as in Pinot (json-index.md:53-81)."""
-        self._json_index_configs[column] = config
+        (functions.json.JsonIndexConfig) to a table's JSON column:
+        JSON_MATCH predicates on paths the config leaves unindexed match
+        nothing, as in Pinot (json-index.md:53-81)."""
+        self.table(table).json_configs[column] = config
 
     def infer_json(self, table: str, column: str):
         """Build the engine's JSON-index analogue: infer + cache the
         column's JSON schema so JSON_MATCH [*] paths compile."""
-        self._json_schemas[column] = infer_json_schema(self._dfs[table], column)
+        t = self.table(table)
+        t.json_schemas[column] = infer_json_schema(t.df, column)
 
     def register_ingested(self, name: str, table_path: str):
         """Register a table written by sources.batch.ingest_batch, picking
@@ -2648,198 +2672,54 @@ class PinotEngine:
         from apache_pinot_spark.sources.batch import read_table_meta, register_table
 
         df = register_table(self.spark, name, table_path)
-        self._note_table(name, df)
-        meta = read_table_meta(table_path)
-        for col, units in (meta["config"].get("timestampIndexGranularities") or {}).items():
-            for unit in units:
-                self._timestamp_index[(col, unit.upper())] = f"${col}${unit.upper()}"
-        for col in meta["config"].get("textIndexColumns") or []:
-            self._text_index[col] = f"${col}$tokens"
-        sp_col = meta["config"].get("segmentPartitionColumn")
-        if sp_col:
-            self._segment_partitions[sp_col] = int(
-                meta["config"].get("numSegmentPartitions", 8)
-            )
-        for c, n in (meta["config"].get("segmentPartitionMap") or {}).items():
-            self._segment_partitions[c] = int(n)
-        self.apply_sketch_columns(meta["config"].get("sketchColumns") or {})
+        cfg = read_table_meta(table_path)["config"]
+        sp_col = cfg.get("segmentPartitionColumn")
+        partitions = {sp_col: int(cfg.get("numSegmentPartitions", 8))} if sp_col else {}
+        partitions.update(
+            {c: int(n) for c, n in (cfg.get("segmentPartitionMap") or {}).items()}
+        )
+        self._note_table(
+            name,
+            df,
+            timestamp_index={
+                c: {u.upper() for u in units}
+                for c, units in (cfg.get("timestampIndexGranularities") or {}).items()
+            },
+            text_index=set(cfg.get("textIndexColumns") or []),
+            segment_partitions=partitions,
+            sketches=self._sketch_kinds(cfg.get("sketchColumns") or {}),
+        )
 
-    def apply_sketch_columns(self, mapping: dict[str, str]) -> None:
-        """Config-driven sketch-column wiring (TableConfig.sketch_columns
-        / the table config's sketchColumns map): route each declared
-        BYTES column to its wire-format registration so the matching
-        aggregate functions merge in the right domain — the whole-table
-        answer to the reference's serialized sketch metric columns
-        (schema.md:48) without imperative per-column calls."""
-        routes = {
-            "datasketches_hll": self.register_ds_hll_column,
-            "theta": self.register_theta_column,
-            "tuple": self.register_tuple_column,
-            "bitmap": self.register_bitmap_column,
-            "tdigest": self.register_tdigest_column,
-            "kll": self.register_kll_column,
-            "hllplus": self.register_hllplus_column,
-            "hll_clearspring": self.register_clearspring_hll_column,
-            "freq_longs": lambda c: self.register_freq_wire_column(c, "longs"),
-            "freq_strings": lambda c: self.register_freq_wire_column(c, "strings"),
-            "cpc": self.register_cpc_column,
-        }
-        for col, kind in mapping.items():
-            route = routes.get(str(kind).lower())
-            if route is None:
+    def apply_sketch_columns(self, table: str, mapping: dict[str, str]) -> None:
+        """Declare BYTES columns of ``table`` as serialized sketch state,
+        column → kind (the kinds and their functions are MIGRATION.md's
+        table), so the matching aggregate functions merge in that wire
+        format. The one declaration path: TableConfig.sketch_columns and
+        ``POST /tables/{name}/sketchColumns`` both land here."""
+        self.table(table).sketches.update(self._sketch_kinds(mapping))
+
+    def _sketch_kinds(self, mapping: dict[str, str]) -> dict[str, str]:
+        """Validate a column → sketch-kind map and register the UDFs its
+        kinds need beyond the session set."""
+        import importlib
+
+        kinds = {col: str(kind).lower() for col, kind in mapping.items()}
+        for col, kind in kinds.items():
+            if kind not in _SKETCH_KINDS:
                 raise ValueError(
-                    f"sketchColumns[{col!r}]: unknown sketch kind {kind!r}; "
-                    f"expected one of {sorted(routes)}"
+                    f"sketchColumns[{col!r}]: unknown sketch kind {mapping[col]!r}; "
+                    f"expected one of {sorted(_SKETCH_KINDS)}"
                 )
-            route(col)
+        for module, fn in {_SKETCH_KINDS[k] for k in kinds.values()} - {None}:
+            mod = importlib.import_module(f"apache_pinot_spark.functions.{module}")
+            getattr(mod, fn)(self.spark)
+        return kinds
 
-    def register_sketch_range(self, column: str, lo: float, hi: float) -> None:
+    def register_sketch_range(self, table: str, column: str, lo: float, hi: float) -> None:
         """Declare the [lo, hi) histogram range of a BYTES percentile-sketch
         column (functions/quantile.py) so PERCENTILEEST / PERCENTILETDIGEST
         over it can merge-and-estimate (schema.md:48)."""
-        self._sketch_ranges[column] = (float(lo), float(hi))
-
-    def register_tdigest_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized t-digest percentile state
-        (tdunning MergingDigest VERBOSE — Pinot's object-serde wire
-        format, schema.md:48). PERCENTILETDIGEST/PERCENTILEEST over it
-        merges the group's digests and estimates, via the pandas
-        grouped-agg UDF in functions/tdigest.py."""
-        from apache_pinot_spark.functions.tdigest import register_tdigest_udfs
-
-        register_tdigest_udfs(self.spark)
-        self._tdigest_columns.add(column)
-
-    def register_theta_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized theta-sketch distinct
-        state (Apache DataSketches compact-theta wire format,
-        functions/theta.py — a migrating user's sketch columns load
-        directly). DISTINCTCOUNTTHETASKETCH over it unions the group's
-        sketches and estimates; DISTINCTCOUNTRAWTHETASKETCH returns the
-        merged blob."""
-        from apache_pinot_spark.functions.theta import register_theta_udfs
-
-        register_theta_udfs(self.spark)
-        self._theta_columns.add(column)
-
-    def register_cpc_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches CPC sketch
-        state (CpcSketch.toByteArray(); the reference's
-        DISTINCTCOUNTCPCSKETCH columns, schema.md:48).
-        DISTINCTCOUNTCPCSKETCH over it merges the compressed blobs in the
-        coupon-matrix domain and estimates library-exactly;
-        DISTINCTCOUNTRAWCPCSKETCH returns the merged MERGED-format blob
-        (hex) — byte-identical to the jar's own CpcUnion result
-        (functions/cpc_wire.py, golden vs datasketches-java 6.2.0)."""
-        from apache_pinot_spark.functions.cpc_wire import register_cpc_udfs
-
-        register_cpc_udfs(self.spark)
-        self._cpc_columns.add(column)
-
-    def register_bitmap_column(self, column: str) -> None:
-        """Declare a BYTES column as SERIALIZED RoaringBitmap state (the
-        public DistinctCountBitmapAggregationFunction convention for
-        BYTES input; functions/bitmap_wire.py — byte-golden against the
-        RoaringBitmap-1.3.0 jar on Spark's classpath, portable-spec
-        format incl. run containers). DISTINCTCOUNTBITMAP over it ORs
-        the group's bitmaps and counts the union;
-        DISTINCTCOUNTRAWBITMAP returns the merged wire blob as hex."""
-        from apache_pinot_spark.functions.bitmap_wire import register_bitmap_udfs
-
-        register_bitmap_udfs(self.spark)
-        self._bitmap_columns.add(column)
-
-    def register_ds_hll_column(self, column: str) -> None:
-        """Declare a BYTES column as Apache DataSketches HLL blobs
-        (family 7 — the format Spark's own hll_sketch_agg and the wider
-        Spark/Databricks ecosystem serialize, readable by
-        datasketches-java HllSketch.heapify). DISTINCTCOUNTHLL over it
-        merges via the NATIVE hll_union_agg + hll_sketch_estimate —
-        the one sketch kind whose merge path never leaves the JVM.
-        One composition limit follows from Spark itself: a native
-        aggregate cannot share a SELECT with grouped-agg pandas UDFs,
-        so this kind cannot be combined with the other sketch kinds in
-        a single statement (run it in its own)."""
-        self._ds_hll_columns.add(column)
-
-    def register_tuple_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches
-        integer-summary TUPLE sketch state (functions/tuple_wire.py —
-        validated against the datasketches-java jar on Spark's
-        classpath; serial version 3, murmur3 seed 9001 hash domain).
-        DISTINCTCOUNTTUPLESKETCH / SUMVALUESINTEGERSUMTUPLESKETCH /
-        AVGVALUEINTEGERSUMTUPLESKETCH over it merge the group's blobs
-        in the wire domain; DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH
-        returns the merged blob as hex."""
-        from apache_pinot_spark.functions.tuple_wire import register_tuple_udfs
-
-        register_tuple_udfs(self.spark)
-        self._tuple_columns.add(column)
-
-    def register_clearspring_hll_column(self, column: str) -> None:
-        """Declare a BYTES column as CLEARSPRING-serialized HLL state —
-        the reference's own DISTINCTCOUNTHLL sketch-column wire format
-        (stream-lib HyperLogLog.getBytes(), schema.md:48), as a
-        migrating user's tables hold it. DISTINCTCOUNTHLL over it
-        register-max merges + estimates in the clearspring domain
-        (functions/hll_clearspring.py, byte-golden vs stream-2.9.8);
-        DISTINCTCOUNTRAWHLL returns the merged wire blob as hex."""
-        from apache_pinot_spark.functions.hll_clearspring import (
-            register_clearspring_udfs,
-        )
-
-        register_clearspring_udfs(self.spark)
-        self._clearspring_hll_columns.add(column)
-
-    def register_kll_column(self, column: str) -> None:
-        """Declare a BYTES column as serialized DataSketches
-        KllDoublesSketch percentile state (the reference's PERCENTILEKLL
-        sketch columns, schema.md:48). PERCENTILEKLL over it merges the
-        group's blobs in weighted-sample space and estimates with the
-        library's sorted-view rule; PERCENTILERAWKLL re-serializes the
-        deterministic merge as loadable wire state (functions/kll_wire.py,
-        both directions jar-validated against datasketches-java)."""
-        from apache_pinot_spark.functions.kll_wire import register_kll_udfs
-
-        register_kll_udfs(self.spark)
-        self._kll_columns.add(column)
-
-    def register_freq_wire_column(self, column: str, kind: str) -> None:
-        """Declare a BYTES column as serialized DataSketches frequencies
-        state (the reference's FREQUENTLONGSSKETCH /
-        FREQUENTSTRINGSSKETCH columns), kind 'longs' or 'strings'.
-        FREQUENT*SKETCH over it merges in count space and returns the
-        merged WIRE blob as hex — heapifiable by the reference library
-        (functions/freq_wire.py, byte-validated vs datasketches-java)."""
-        if kind not in ("longs", "strings"):
-            raise ValueError("freq wire column kind must be 'longs' or 'strings'")
-        from apache_pinot_spark.functions.freq_wire import register_freq_wire_udfs
-
-        register_freq_wire_udfs(self.spark)
-        self._freq_wire_columns[column] = kind
-
-    def register_hllplus_column(self, column: str) -> None:
-        """Declare a BYTES column as stream-lib HyperLogLogPlus state —
-        the reference's DISTINCTCOUNTHLLPLUS sketch-column wire format
-        (HyperLogLogPlus.getBytes(), sparse and normal regimes).
-        DISTINCTCOUNTHLLPLUS over it merges + estimates in the wire
-        domain (functions/hllplus_wire.py, byte-golden vs
-        stream-2.9.8)."""
-        from apache_pinot_spark.functions.hllplus_wire import (
-            register_hllplus_udfs,
-        )
-
-        register_hllplus_udfs(self.spark)
-        self._hllplus_columns.add(column)
-
-    def enable_hllplus_raw(self) -> None:
-        """Register the HLL++ UDFs without declaring a column — lets
-        DISTINCTCOUNTRAWHLLPLUS build wire sketches over raw columns."""
-        from apache_pinot_spark.functions.hllplus_wire import (
-            register_hllplus_udfs,
-        )
-
-        register_hllplus_udfs(self.spark)
+        self.table(table).sketch_ranges[column] = (float(lo), float(hi))
 
     def theta_set_estimate(
         self,
@@ -2868,7 +2748,7 @@ class PinotEngine:
         if not predicates:
             raise ValueError("theta_set_estimate needs at least one predicate")
         kk = k or _t.DEFAULT_NOMINAL
-        df = self._dfs[table]
+        df = self.table(table).df
         sketches = {
             f"${i + 1}": _t.theta_sketch_global(df.where(p).select(column), column, kk)
             for i, p in enumerate(predicates)
@@ -2894,7 +2774,6 @@ class PinotEngine:
 
         self.register(name, upsert_view(df, upsert_cfg))
         self.register(f"{name}_raw", df)
-        self._upsert_tables[name] = upsert_cfg
 
     def register_dedup_table(self, name: str, df: DataFrame, dedup_cfg) -> None:
         """Register a table with dedup semantics (public dedup config:
@@ -2904,34 +2783,20 @@ class PinotEngine:
 
         self.register(name, dedup_keep_first_view(df, dedup_cfg))
         self.register(f"{name}_raw", df)
-        self._upsert_tables[name] = dedup_cfg
-
-    @property
-    def dialect(self) -> PinotDialect:
-        return PinotDialect(
-            self._array_columns,
-            self._json_schemas,
-            self._timestamp_index,
-            self._text_index,
-            self._table_columns,
-            self._binary_columns,
-            self._json_index_configs,
-            self._segment_partitions,
-            self._sketch_ranges,
-            self._tdigest_columns,
-            self._theta_columns,
-            self._clearspring_hll_columns,
-            self._kll_columns,
-            self._freq_wire_columns,
-            self._hllplus_columns,
-            self._bitmap_columns,
-            self._tuple_columns,
-            self._ds_hll_columns,
-            cpc_columns=self._cpc_columns,
-        )
 
     def rewrite(self, pinot_sql: str) -> RewriteResult:
-        return self.dialect.rewrite(pinot_sql)
+        """Rewrite against the merged facts of the registered tables the
+        statement names; a statement naming none gets only the
+        table-independent rewrites."""
+        named = {
+            r.lower(): t
+            for r in _table_refs(pinot_sql)
+            if (t := self._tables.get(r.lower())) is not None
+        }
+        meta, notes = TableMeta.merge(named)
+        rr = PinotDialect(meta).rewrite(pinot_sql)
+        rr.notes[:0] = notes
+        return rr
 
     def sql(self, pinot_sql: str) -> DataFrame:
         if m := _EXPLAIN_RE.match(pinot_sql):
@@ -3300,12 +3165,12 @@ class PinotEngine:
             "numEntriesScannedPostFilter": n_rows * n_projected,
         }
         froms = _FROM_RE.findall(sql)
-        if len(froms) != 1 or froms[0] not in self._dfs:
+        t = self._tables.get(froms[0].lower()) if len(froms) == 1 else None
+        if t is None:
             return out
-        tbl = froms[0]
-        if tbl not in self._table_counts:
-            self._table_counts[tbl] = self._dfs[tbl].count()
-        total = self._table_counts[tbl]
+        if t.count is None:
+            t.count = t.df.count()
+        total = t.count
         out["totalDocs"] = total
         wm = re.search(
             r"\bWHERE\b(.*?)(\bGROUP\s+BY\b|\bORDER\s+BY\b|\bLIMIT\b|$)",
@@ -3322,7 +3187,7 @@ class PinotEngine:
         if matched is None:
             return out
         filter_cols = {
-            c for c in self._dfs[tbl].columns
+            c for c in t.df.columns
             if re.search(rf"\b{re.escape(c)}\b", where)
         }
         out["numDocsScanned"] = matched

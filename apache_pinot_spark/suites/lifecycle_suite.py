@@ -668,7 +668,7 @@ def _percentile_sketch_bytes(spark, sf_dir):
     )
     eng = PinotEngine(spark)
     eng.register("qty_segments", segments)
-    eng.register_sketch_range("qty_sketch", _QTY_LO, _QTY_HI)
+    eng.register_sketch_range("qty_segments", "qty_sketch", _QTY_LO, _QTY_HI)
     return eng.sql(
         "SELECT PERCENTILEEST(qty_sketch, 50) AS p50, "
         "PERCENTILEEST(qty_sketch, 90) AS p90, "

@@ -277,19 +277,23 @@ def main() -> None:
     # parallel timed region IS saturated, so a passive before/after delta
     # over each run captures exactly the contention the run experienced.
     # Reported metadata only — nothing in the timing path changes.
-    _HZ = float(os.sysconf("SC_CLK_TCK") or 100)
+    # sysconf reports -1 where the tick rate is unknown
+    _hz = os.sysconf("SC_CLK_TCK") if "SC_CLK_TCK" in os.sysconf_names else -1
+    _HZ = float(_hz) if _hz > 0 else 100.0
     _NCPU = float(os.cpu_count() or 1)
 
-    def _steal_jiffies() -> int:
+    def _steal_jiffies() -> int | None:
         try:
             with open("/proc/stat") as fh:
-                f = fh.readline().split()
-            return int(f[8]) if len(f) > 8 else 0
-        except OSError:
-            return 0
+                return int(fh.readline().split()[8])
+        except (OSError, IndexError, ValueError):
+            return None
 
-    def _steal_pct(j0: int, t0: float, j1: int, t1: float) -> float:
-        """Steal jiffies as % of total host CPU capacity over [t0, t1]."""
+    def _steal_pct(j0, t0: float, j1, t1: float) -> float | None:
+        """Steal jiffies as % of total host CPU capacity over [t0, t1];
+        None (null in the artifact) when either /proc/stat read failed."""
+        if j0 is None or j1 is None:
+            return None
         dt = max(1e-9, t1 - t0)
         return round((j1 - j0) / (dt * _HZ * _NCPU) * 100.0, 2)
 

@@ -167,7 +167,7 @@ def test_sql_surface_registered_cpc_column(spark):
     df = spark.createDataFrame(blobs, "grp INT, cpc BINARY")
     eng = PinotEngine(spark)
     eng.register("cpc_tbl", df)
-    eng.register_cpc_column("cpc")
+    eng.apply_sketch_columns("cpc_tbl", {"cpc": "cpc"})
     rows = eng.sql(
         "SELECT grp, DISTINCTCOUNTCPCSKETCH(cpc) AS est, "
         "DISTINCTCOUNTRAWCPCSKETCH(cpc) AS raw "
@@ -197,7 +197,7 @@ def test_sketch_columns_config_routes_cpc(spark):
     )
     eng = PinotEngine(spark)
     eng.register("cpc_cfg_tbl", df)
-    eng.apply_sketch_columns({"c": "cpc"})
+    eng.apply_sketch_columns("cpc_cfg_tbl", {"c": "cpc"})
     row = eng.sql(
         "SELECT DISTINCTCOUNTCPCSKETCH(c) AS est FROM cpc_cfg_tbl"
     ).collect()[0]

@@ -17,7 +17,7 @@ def test_ds_hll_column_native_merge(spark):
     blobs = df.groupBy("seg").agg(F.hll_sketch_agg("uid").alias("uid_hll"))
     eng = PinotEngine(spark)
     eng.register("ds_hll_t", blobs)
-    eng.register_ds_hll_column("uid_hll")
+    eng.apply_sketch_columns("ds_hll_t", {"uid_hll": "datasketches_hll"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(uid_hll) AS dc FROM ds_hll_t"
     ).collect()[0]["dc"]
@@ -56,7 +56,7 @@ def test_ds_hll_config_driven_kind(spark):
     blobs = df.groupBy("seg").agg(F.hll_sketch_agg("uid").alias("u_hll"))
     eng = PinotEngine(spark)
     eng.register("ds_hll_cfg_t", blobs)
-    eng.apply_sketch_columns({"u_hll": "datasketches_hll"})
+    eng.apply_sketch_columns("ds_hll_cfg_t", {"u_hll": "datasketches_hll"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(u_hll) AS dc FROM ds_hll_cfg_t"
     ).collect()[0]["dc"]
@@ -75,7 +75,7 @@ def test_ds_hll_mixed_lgk_merges(spark):
     )
     eng = PinotEngine(spark)
     eng.register("mixed_lgk", a.unionByName(b))
-    eng.register_ds_hll_column("h")
+    eng.apply_sketch_columns("mixed_lgk", {"h": "datasketches_hll"})
     got = eng.sql(
         "SELECT DISTINCTCOUNTHLL(h) AS dc FROM mixed_lgk"
     ).collect()[0]["dc"]

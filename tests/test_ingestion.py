@@ -539,7 +539,7 @@ def test_config_driven_sketch_columns(spark, tmp_path_factory):
     import pytest as _pt
 
     with _pt.raises(ValueError, match="unknown sketch kind"):
-        eng.apply_sketch_columns({"x": "moments"})  # cpc became real in r8
+        eng.apply_sketch_columns("seg_stats", {"x": "moments"})  # cpc became real in r8
 
 
 def test_ingestion_transforms_and_filter(spark, tmp_path_factory):

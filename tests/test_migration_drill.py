@@ -88,6 +88,7 @@ def drill(spark):
     eng = PinotEngine(spark)
     eng.register("drill", df.join(ds, "seg"))
     eng.apply_sketch_columns(
+        "drill",
         {
             "u_theta": "theta",
             "u_tuple": "tuple",
@@ -107,7 +108,7 @@ def test_every_kind_in_one_statement(drill):
     # all pandas-UDF-served kinds together in ONE statement; the
     # native-aggregate ds_hll kind runs in its own (Spark does not
     # allow grouped-agg pandas UDFs and native aggregates in one
-    # SELECT — documented on register_ds_hll_column)
+    # SELECT — documented in MIGRATION.md)
     row = eng.sql(
         "SELECT DISTINCTCOUNTTHETASKETCH(u_theta) AS t, "
         "DISTINCTCOUNTTUPLESKETCH(u_tuple) AS tp, "

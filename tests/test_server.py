@@ -197,3 +197,36 @@ def test_sketch_columns_over_http(http_server, spark):
         raise AssertionError("expected HTTPError")
     except urllib.error.HTTPError as e:
         assert e.code == 404  # unknown table
+
+
+def test_delete_drops_engine_facts(http_server, spark):
+    """DELETE /tables/{name} forgets the engine's catalog state too: the
+    timestamp-index rewrite that the ingested layout enabled is gone, and
+    the table is no longer known to the engine."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from apache_pinot_spark.catalog import load_tables
+    from apache_pinot_spark.sources.batch import TableConfig
+
+    engine, catalog = http_server.engine, http_server.catalog
+    ev = load_tables(spark, SF_SMOKE, ["events"])["events"].select(
+        "event_id", "user_id", "event_type", "value",
+        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+    )
+    catalog.create_table(
+        "events_http",
+        TableConfig(table_name="events_gone", time_column="ts_ms",
+                    timestamp_index_granularities={"ts_ms": ["DAY"]}),
+        ev,
+    )
+    engine.register_ingested("events_gone", os.path.join(catalog.warehouse, "events_gone"))
+    sql = "SELECT dateTrunc('DAY', ts_ms) AS d, COUNT(*) AS c FROM events_gone GROUP BY d"
+    assert "`$ts_ms$DAY`" in engine.rewrite(sql).sql
+    assert engine.table("events_gone").timestamp_index == {"ts_ms": {"DAY"}}
+    status, _ = _req(http_server.port, "DELETE", "/tables/events_gone")
+    assert status == 200
+    with pytest.raises(KeyError):
+        engine.table("events_gone")
+    assert "$ts_ms$DAY" not in engine.rewrite(sql).sql

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
-from apache_pinot_spark.sqlfront import PinotDialect, PinotEngine, rewrite_calls
+from apache_pinot_spark.sqlfront import PinotDialect, PinotEngine, TableMeta, rewrite_calls
 
 
 @pytest.fixture(scope="module")
@@ -81,7 +81,7 @@ def test_distinctcount_percentile():
 
 
 def test_distinctcounthll_bytes_column_merges():
-    d = PinotDialect(binary_columns={"sk"})
+    d = PinotDialect(TableMeta(binary={"sk"}))
     rr = d.rewrite("SELECT DISTINCTCOUNTHLL(sk) FROM t")
     assert "hex(sk)" in rr.sql and "md5" not in rr.sql  # merge path, no re-hash
 
@@ -89,7 +89,7 @@ def test_distinctcounthll_bytes_column_merges():
 def test_alias_in_where_literal_and_shadow_safe():
     # an alias named 'd' must not rewrite the string literal 'd', and an
     # alias that shadows a REAL column must leave the column reference
-    d = PinotDialect(table_columns={"event_type", "ts"})
+    d = PinotDialect(TableMeta(columns={"event_type", "ts"}))
     rr = d.rewrite(
         "SELECT dateTrunc('DAY', ts) AS d, COUNT(*) AS cnt FROM events "
         "WHERE event_type = 'd' AND d > 5 GROUP BY d"
@@ -103,20 +103,130 @@ def test_alias_in_where_literal_and_shadow_safe():
 
 
 def test_mv_predicate_literal_safe():
-    d = PinotDialect(array_columns={"tags"})
+    d = PinotDialect(TableMeta(array={"tags"}))
     rr = d.rewrite("SELECT COUNT(*) FROM t WHERE note = 'tags = 3' AND tags = 'x'")
     assert "note = 'tags = 3'" in rr.sql
     assert "array_contains(tags, 'x')" in rr.sql
 
 
 def test_mv_predicate_rewrite():
-    d = PinotDialect(array_columns={"tags"})
+    d = PinotDialect(TableMeta(array={"tags"}))
     rr = d.rewrite("SELECT COUNT(*) FROM t WHERE tags = 'x'")
     assert "array_contains(tags, 'x')" in rr.sql
     rr = d.rewrite("SELECT COUNT(*) FROM t WHERE tags IN ('x', 'y')")
     assert "arrays_overlap(tags, array('x', 'y'))" in rr.sql
     rr = d.rewrite("SELECT COUNT(*) FROM t WHERE tags > 3")
     assert "exists(tags, x -> x > 3)" in rr.sql
+
+
+# --------------------------------------------------------------------------
+# Per-table catalog state: column facts never leak between tables
+# --------------------------------------------------------------------------
+
+
+def test_array_fact_stays_with_its_table(spark):
+    # a(tags ARRAY) and b(tags STRING): only FROM a gets ANY-element semantics
+    eng = PinotEngine(spark)
+    eng.register("pt_mv_a", spark.createDataFrame([(1, ["x", "y"])], "id int, tags array<string>"))
+    eng.register("pt_mv_b", spark.createDataFrame([(1, "x"), (2, "z")], "id int, tags string"))
+    assert "array_contains(tags, 'x')" in eng.rewrite(
+        "SELECT id FROM pt_mv_a WHERE tags = 'x'").sql
+    sql = "SELECT id FROM pt_mv_b WHERE tags = 'x'"
+    assert "array_contains" not in eng.rewrite(sql).sql
+    assert [r["id"] for r in eng.sql(sql).collect()] == [1]
+
+
+def test_reregistered_table_drops_stale_facts(spark):
+    eng = PinotEngine(spark)
+    eng.register("pt_rereg", spark.createDataFrame([(1, ["x"])], "id int, tags array<string>"))
+    eng.register("pt_rereg", spark.createDataFrame([(1, "x")], "id int, tags string"))
+    sql = "SELECT id FROM pt_rereg WHERE tags = 'x'"
+    assert "array_contains" not in eng.rewrite(sql).sql
+    assert [r["id"] for r in eng.sql(sql).collect()] == [1]
+
+
+def _ingest(spark, tmp_path, name, fields, rows, **cfg):
+    from apache_pinot_spark.plans.schema import PinotSchema
+    from apache_pinot_spark.sources import batch as B
+
+    sch = PinotSchema.from_json({
+        "schemaName": name,
+        "dimensionFieldSpecs": [{"name": n, "dataType": t} for n, t in fields],
+    })
+    ddl = ", ".join(f"{n} {'bigint' if t == 'LONG' else 'string'}" for n, t in fields)
+    return B.ingest_batch(
+        spark, sch, B.TableConfig(table_name=name, **cfg),
+        spark.createDataFrame(rows, ddl), warehouse=str(tmp_path), mode="overwrite",
+    )
+
+
+def test_segment_partition_routing_stays_with_its_table(spark, tmp_path):
+    # user_id routes on the partitioned table only; the plain table has no
+    # bucket column, so a leaked bucket predicate would fail analysis
+    eng = PinotEngine(spark)
+    rows = [(i, f"e{i}") for i in range(20)]
+    fields = [("user_id", "LONG"), ("event_type", "STRING")]
+    eng.register_ingested("pt_routed", _ingest(
+        spark, tmp_path, "pt_routed", fields, rows,
+        segment_partition_column="user_id", num_segment_partitions=4))
+    eng.register("pt_plain", spark.createDataFrame(rows, "user_id bigint, event_type string"))
+    assert "pmod(xxhash64" in eng.rewrite(
+        "SELECT COUNT(*) AS c FROM pt_routed WHERE user_id = 5").sql
+    sql = "SELECT COUNT(*) AS c FROM pt_plain WHERE user_id = 5"
+    assert "pmod" not in eng.rewrite(sql).sql
+    assert eng.sql(sql).collect()[0]["c"] == 1
+
+
+def test_text_index_stays_with_its_table(spark, tmp_path):
+    eng = PinotEngine(spark)
+    rows = [(1, "spark joins"), (2, "pinot segments")]
+    eng.register_ingested("pt_docs_ix", _ingest(
+        spark, tmp_path, "pt_docs_ix", [("doc_id", "LONG"), ("text", "STRING")], rows,
+        text_index_columns=["text"]))
+    eng.register("pt_docs_plain", spark.createDataFrame(rows, "doc_id bigint, text string"))
+    assert "`$text$tokens`" in eng.rewrite(
+        "SELECT COUNT(*) AS c FROM pt_docs_ix WHERE TEXT_MATCH(text, 'spark')").sql
+    sql = "SELECT COUNT(*) AS c FROM pt_docs_plain WHERE TEXT_MATCH(text, 'spark')"
+    assert "$tokens" not in eng.rewrite(sql).sql
+    assert eng.sql(sql).collect()[0]["c"] == 1
+
+
+def test_join_of_disagreeing_tables_leaves_column_unrewritten(spark):
+    eng = PinotEngine(spark)
+    eng.register("pt_j_a", spark.createDataFrame(
+        [(1, ["x"], ["y"])], "id int, tags array<string>, labels array<string>"))
+    eng.register("pt_j_b", spark.createDataFrame([(1, "x")], "id int, tags string"))
+    rr = eng.rewrite(
+        "SELECT COUNT(*) FROM pt_j_a JOIN pt_j_b ON pt_j_a.id = pt_j_b.id "
+        "WHERE tags = 'x' AND labels = 'y'"
+    )
+    assert "array_contains(tags" not in rr.sql
+    assert any("'tags'" in n and "pt_j_a" in n and "pt_j_b" in n for n in rr.notes)
+    # a column only one side has keeps its facts
+    assert "array_contains(labels, 'y')" in rr.sql
+
+
+def test_json_index_config_is_per_table(spark):
+    from apache_pinot_spark.functions.json import JsonIndexConfig
+
+    eng = PinotEngine(spark)
+    df = spark.createDataFrame(
+        [(1, '{"name": "adam", "age": 20}'), (2, '{"name": "bob", "age": 30}')],
+        "id int, person string",
+    )
+    eng.register("pt_json_cfg", df)
+    eng.register("pt_json_plain", df)
+    eng.set_json_index_config("pt_json_cfg", "person", JsonIndexConfig(exclude_paths={"$.age"}))
+
+    def count(table, pred):
+        return eng.sql(
+            f"SELECT COUNT(*) AS c FROM {table} WHERE JSON_MATCH(person, '{pred}')"
+        ).collect()[0]["c"]
+
+    # the excluded path has no index entries: matches nothing (json-index.md:53-81)
+    assert count("pt_json_cfg", '"$.age" = 20') == 0
+    assert count("pt_json_cfg", "\"$.name\" = ''adam''") == 1
+    assert count("pt_json_plain", '"$.age" = 20') == 1
 
 
 # --------------------------------------------------------------------------
@@ -358,7 +468,7 @@ def test_dialect_percentile_over_bytes_sketch(spark):
     # range not registered yet → clear error
     with pytest.raises(ValueError, match="register_sketch_range"):
         eng.sql("SELECT PERCENTILEEST(qsk, 50) AS p50 FROM qsk_segments")
-    eng.register_sketch_range("qsk", lo, hi)
+    eng.register_sketch_range("qsk_segments", "qsk", lo, hi)
     got = eng.sql(
         "SELECT PERCENTILEEST(qsk, 50) AS p50, PERCENTILETDIGEST(qsk, 95) AS p95 "
         "FROM qsk_segments"
@@ -388,7 +498,7 @@ def test_rollup_rewrite_with_dimension_where(spark, tmp_path):
     from apache_pinot_spark.plans.rollup import RollupSpec, build_rollup
 
     eng = PinotEngine(spark, "/root/testdata/sf0.001")
-    li = eng._dfs["lineitem"]
+    li = eng.table("lineitem").df
     spec = RollupSpec(
         table="lineitem",
         dimensions=["l_returnflag", "l_linestatus"],
@@ -614,7 +724,7 @@ def test_vector_similarity_cosine_scoring(spark):
     # cross-check the winner against a numpy cosine over the same data
     import numpy as np
 
-    pdf = eng._dfs["embeddings"].select("vec_id", "embedding").toPandas()
+    pdf = eng.table("embeddings").df.select("vec_id", "embedding").toPandas()
     qv = np.zeros(len(pdf["embedding"][0])); qv[0] = 1.0
     def cos(v):
         v = np.asarray(v, dtype=np.float64)
@@ -658,9 +768,9 @@ def test_lookup_function_decorates_fact_rows(spark):
     assert len(rows) == 25
     want = {
         (r["n_name"], r["r_name"])
-        for r in eng._dfs["nation"].join(
-            eng._dfs["region"],
-            eng._dfs["nation"].n_regionkey == eng._dfs["region"].r_regionkey,
+        for r in eng.table("nation").df.join(
+            eng.table("region").df,
+            eng.table("nation").df.n_regionkey == eng.table("region").df.r_regionkey,
         ).select("n_name", "r_name").collect()
     }
     assert {(r["n_name"], r["rname"]) for r in rows} == want
@@ -973,7 +1083,7 @@ def test_remaining_scalar_mappings_and_alias_forms(spark):
     assert len(scalar("SHA512(CAST('x' AS BINARY))")) == 128
     assert scalar("ARGMIN(id, id)") == 0
     # concatenated-name forms are the same handlers as the underscored ones
-    d = eng.dialect
+    d = PinotDialect()
     r1 = d.rewrite("SELECT FUNNELMAXSTEP(ts, 10, 1, a = 1) FROM t GROUP BY u").sql
     r2 = d.rewrite("SELECT FUNNEL_MAX_STEP(ts, 10, 1, a = 1) FROM t GROUP BY u").sql
     assert r1 == r2
@@ -1117,7 +1227,7 @@ def test_explain_plan_for_and_set_options(spark):
     ]
     assert env["resultTable"]["rows"]
     # SET prefix form
-    rr = eng.dialect.rewrite(
+    rr = eng.rewrite(
         "SET timeoutMs=5000; SET useStarTree='false'; "
         "SELECT COUNT(*) FROM lineitem OPTION(numGroupsLimit=7)"
     )
@@ -1135,7 +1245,7 @@ def test_explain_plan_for_and_set_options(spark):
     spec = RollupSpec(
         table="lineitem", dimensions=["l_returnflag"], metrics=["l_quantity"]
     )
-    build_rollup(spark, eng2._dfs["lineitem"], spec,
+    build_rollup(spark, eng2.table("lineitem").df, spec,
                  warehouse=tempfile.mkdtemp(prefix="st_opt_"))
     eng2.add_rollup(spec)
     q = "SELECT l_returnflag, SUM(l_quantity) AS s FROM lineitem GROUP BY l_returnflag"
@@ -1161,7 +1271,7 @@ def test_envelope_rollup_and_percentilerawest(spark, tmp_path):
     spec = RollupSpec(
         table="lineitem", dimensions=["l_returnflag"], metrics=["l_quantity"]
     )
-    build_rollup(spark, eng._dfs["lineitem"], spec, warehouse=str(tmp_path))
+    build_rollup(spark, eng.table("lineitem").df, spec, warehouse=str(tmp_path))
     eng.add_rollup(spec)
     q = ("SELECT l_returnflag, SUM(l_quantity) AS s FROM lineitem "
          "GROUP BY l_returnflag ORDER BY l_returnflag")
